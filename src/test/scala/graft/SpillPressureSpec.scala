@@ -54,8 +54,20 @@ class SpillPressureSpec extends AnyFunSuite {
   /** Aggregation pressure adds the sort-based-fallback hook Spark's own
     * suites use. Kept SEPARATE from the high-cardinality shapes: a
     * 2-key fallback on a many-group aggregate produces thousands of
-    * tiny spill files whose merge-time read-ahead buffers exhaust the
-    * test heap — a pathology of the hook, not of the operators. */
+    * tiny spill files whose merge-time read buffers exhaust the test
+    * heap — a pathology of the hook, not of the operators.
+    *
+    * q18 is the one shape here that hits it: its partial aggregate
+    * (1,473 keys over 6,000 lineitem rows, one task) spills about every
+    * 3 keys, ≈2,000 spill files, and UnsafeExternalSorter opens all of
+    * them at once to merge. Each open UnsafeSorterSpillReader holds a
+    * hard-coded 1 MiB heap byte[] and a 1 MiB direct read buffer, plus
+    * two 1 MiB heap buffers when read-ahead is on: ≈6 GiB of heap in one
+    * task with read-ahead, ≈2 GiB of heap plus ≈2 GiB direct without.
+    * Read-ahead is a SparkEnv-level setting, so it cannot be turned off
+    * per session; build.sbt runs this suite in its own forked JVM with
+    * spark.unsafe.sorter.spill.read.ahead.enabled=false, so an OOM
+    * here cannot stop the SparkContext the other suites share. */
   private lazy val aggPressured: SparkSession = {
     val s = base.newSession()
     buffered(s)
@@ -114,7 +126,9 @@ class SpillPressureSpec extends AnyFunSuite {
   /** Queries chosen to cover the buffered-operator families: hash agg
     * (q1), join+agg (q3), window (q_window_running), HAVING semi join
     * (q18), and the LSH dedup's window-capped buckets. Second element:
-    * which pressure profile drives the spill. */
+    * which pressure profile drives the spill. q18 is the heap-heavy
+    * one: under [[aggPressured]] its merge holds ≈2,000 spill readers
+    * open at once (see there for the per-reader cost). */
   private val shapes = Seq(
     "q1_pricing_summary" -> true, "q3_shipping_priority" -> true,
     "q_window_running" -> false, "q18_large_volume_cust" -> true,
