@@ -135,18 +135,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.SessionDefaults(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val cpus = SessionDefaults.cpus
+    val spark = SessionDefaults.local(cpus)
       // shuffle-file removals requested by ContextCleaner complete before
       // the cleaner moves on — paired with the pre-query System.gc() so
       // one query's blocks don't bleed into the next query's timing
       .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     // ERROR, not WARN: stray WARNs ("Broadcasting large task binary")
     // land on stdout via log4j's console appender and corrupt the

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Storage-format sweep — the analogue of the reference's perf harness
@@ -15,13 +14,7 @@ import org.apache.spark.sql.functions._
 object StorageSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionDefaults.local(SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val li = Tables.t(spark, sfDir, "lineitem")

@@ -145,8 +145,9 @@ object Tables {
   // Long-backed micros beat a full DECIMAL(28,6) pipeline ~3x on the q1
   // shape (Int128 decimal aggregation per ROW is the hot cost, measured at
   // sf0.1); decimal(38,0)-staged ACCUMULATION of pre-rounded longs is
-  // still 2.06x (tools/MicrosStage, x1000). The limb split below keeps
-  // every per-row op in long codegen and was measured at 1.05x.
+  // still 2.06x (x1000; SCALING.md "Round 17: the long-micros 2^63
+  // overflow class, swept"). The limb split below keeps every per-row op
+  // in long codegen and was measured at 1.05x.
 
   /** Kept for the few call sites that stabilize *within-window* sums. */
   val Dec: DecimalType = DecimalType(28, 6)
@@ -176,7 +177,8 @@ object Tables {
     * far past a 100 TB corpus). The three limb sums recombine in
     * decimal(38,0) on the FINAL aggregated rows only, so the decimal
     * cost is O(groups), not O(rows): measured 1.05x vs the overflowing
-    * long sum (tools/MicrosStage, x1000, min-of-3 interleaved). */
+    * long sum (x1000, min-of-3 interleaved; SCALING.md "Round 17: the
+    * long-micros 2^63 overflow class, swept"). */
   def lsum128(v: Column): Column = {
     val s0 = sum(v.bitwiseAND(lit(LimbMask))).cast(DecimalType(38, 0))
     val s1 = sum(shiftright(v, 22).bitwiseAND(lit(LimbMask)))
@@ -195,8 +197,9 @@ object Tables {
     *
     * Why it exists: the limb count is amplified by ExpandExec — on the
     * multi-distinct shape the 3-limb form measured 2.34x the plain long
-    * sum (tools/MicrosStage mdqa, x1000, min-of-3 interleaved; caught
-    * by the r17 paired bench A/B at 1.31x) while this 2-limb form
+    * sum (x1000, min-of-3 interleaved, SCALING.md "Round 17: the
+    * long-micros 2^63 overflow class, swept"; caught by the r17 paired
+    * bench A/B at 1.31x) while this 2-limb form
     * measures 1.03x, and 1.11x vs 1.09x on the q1 shape — parity
     * everywhere, identical overflow capacity under the bound. */
   def lsum128b(v: Column): Column = {

@@ -110,9 +110,10 @@ object VectorKernels {
     * ONE v materialization + a planes reference object per generated
     * class — the fused replacement for nPlanes separate `vec_dot(v,
     * <array literal>)` calls, each of which re-materialized BOTH sides
-    * per call (the r15 LshProfile found that pattern was ~ALL of the
-    * x1000 embedding-LSH wall time: 60 dots x 2 toDoubleArray x 500k
-    * rows, with the literal side unboxing element-wise). Same
+    * per call (r15 found that pattern was ~ALL of the x1000
+    * embedding-LSH wall time, SCALING.md "Round 15: the embedding
+    * sign-LSH lanes were 95% signature cost": 60 dots x 2 toDoubleArray
+    * x 500k rows, with the literal side unboxing element-wise). Same
     * left-to-right summation and strict `> 0` as the vec_dot form, so
     * every sign decision — and hence the DuckDB oracle — is unchanged. */
   def signSig(v: org.apache.spark.sql.catalyst.util.ArrayData,

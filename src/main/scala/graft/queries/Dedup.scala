@@ -355,9 +355,10 @@ object Dedup extends QueryModule {
     * the minhash16 / simhash48 kernels. Fused into ONE native
     * expression over the stacked plane matrix (r15): the previous form
     * — 60 separate `vec_dot(v, <plane literal>)` calls — was measured
-    * by LshProfile as essentially the WHOLE x1000 lane cost (~80 of
-    * 77-93 s), because every call re-materialized both the vector and
-    * the boxed literal array. [[graft.functions.SignSig]] materializes
+    * as essentially the WHOLE x1000 lane cost (~80 of 77-93 s; SCALING.md
+    * "Round 15: the embedding sign-LSH lanes were 95% signature cost"),
+    * because every call re-materialized both the vector and the boxed
+    * literal array. [[graft.functions.SignSig]] materializes
     * v once and keeps the planes as a primitive codegen reference
     * object; sign decisions (and the DuckDB oracle) are bit-identical. */
   private[graft] def embeddingSig(v: Column): Column = {
@@ -445,8 +446,9 @@ object Dedup extends QueryModule {
     * emitting only matches; oversized buckets degrade to the verified
     * star (bucket-min vs every member — O(bucket) output). Star is not
     * an error path: on a corpus that IS one giant near-dup family (the
-    * x1000 probe's regime — BucketProbe showed 100% of band rows in
-    * oversized buckets) it is the production answer, emitting cluster
+    * x1000 probe's regime — 100% of band rows landed in oversized
+    * buckets, SCALING.md "Round 14: fourth decade for the remaining dedup
+    * lanes") it is the production answer, emitting cluster
     * assignments instead of the quadratic within-family pair set, at
     * the documented cost that non-center member pairs are not emitted.
     *
@@ -494,8 +496,9 @@ object Dedup extends QueryModule {
     // member) pairs with only the small-path buffer ever materialized —
     // per-task memory stays bounded by maxBucket rows regardless of how
     // hot a bucket gets.
-    // Kernel I/O: typed Dataset mapPartitions. The r15 A/B (LshProfile
-    // stage D vs C at x1000, min-of-3: 1.67 vs 1.74 s) DISPROVED the r14
+    // Kernel I/O: typed Dataset mapPartitions. The r15 A/B (stage D vs C
+    // at x1000, min-of-3: 1.67 vs 1.74 s; SCALING.md "Round 15: the
+    // embedding sign-LSH lanes were 95% signature cost") DISPROVED the r14
     // encoder-overhead suspicion — an InternalRow/internalCreateDataFrame
     // variant of this kernel measured IDENTICAL once the signature was
     // fused (see embeddingSig: 60 per-plane vec_dot literal calls were

@@ -637,23 +637,6 @@ object Similarity extends QueryModule {
   /** Conf naming the directory that holds fit-once PQ artifacts. */
   val PqDirConf = "spark.graft.pq.codebookDir"
 
-  /** Profiling hook ([[graft.tools.PqProfile]]): the adc lane split into
-    * its fit and scoring stages so a bench movement can be attributed to
-    * a stage instead of guessed at. Mirrors `s_ann_pq_adc` exactly. */
-  def pqAdcStaged(s: SparkSession, dir: String): PqAdcStages =
-    new PqAdcStages(s, dir)
-
-  final class PqAdcStages(s: SparkSession, dir: String) {
-    private var cb: Array[Array[Array[Double]]] = _
-    def fit(): Unit = { cb = pqFit(pqE(s, dir)) }
-    def score(): DataFrame = {
-      val codes = pqE(s, dir).select(col("vec_id"), pqCodesWideCol(cb).as("cds"))
-      val q = pqE(s, dir).filter(col("vec_id") < 8)
-        .select(col("vec_id").as("qid"), pqLutsWideCol(cb).as("luts"))
-      pqScoreTail(codes, q)
-    }
-  }
-
   /** Fit-once production lane (the r7 verdict's "persist the codebook"
     * item): train codebooks on the deterministic sample, encode the WHOLE
     * corpus, store both as parquet tables — `pq_codebooks` (m, k, pos,

@@ -31,13 +31,7 @@ import org.apache.spark.sql.functions._
 object GenScale {
   def main(args: Array[String]): Unit = {
     val Array(src, dst, repsS) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionDefaults.local(graft.SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, src, dst, repsS.toInt)
     spark.stop()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-stage wall/CPU attribution for one declared lane — the builder's
@@ -23,15 +22,7 @@ object LaneProfile {
     val sfDir = args(0)
     val lane = args(1)
     val warm = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionDefaults(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionDefaults.local(graft.SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(lane)
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dump `.explain("formatted")` for declared queries to files — the
@@ -19,15 +18,7 @@ object PlanDump {
     val suffix = args(2)
     val only = if (args.length > 3) Some(args(3).split(",").map(_.trim).toSet)
                else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.SessionDefaults(SparkSession.builder())
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionDefaults.local(graft.SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val names = only.getOrElse(graft.SparkEntry.queries.keySet)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Two-decade scaling spot-check (the r11 review's "make the scaling
   * claim empirical, not extrapolated" item): runs the two heaviest
   * dedup lanes — `d_dedup_minhash_lsh` (banded LSH, expected ~linear
@@ -17,15 +15,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse("/root/testdata/sf0.01")
     val runs = args.lift(1).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.SessionDefaults.local(graft.SessionDefaults.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // the semdedup production lane (K = ceil(sqrt(n)), the paper's knob)
     spark.conf.set("spark.graft.semdedup.k", "auto")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Sustained-rate measurement for the streaming lanes — the reference's
@@ -39,14 +39,7 @@ object StreamThroughput {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val waves = args.lift(1).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.SessionDefaults.local(graft.SessionDefaults.cpus)
       // r18 diagnosis: the late-wave drift (r17's semdedup Q4 uptick) is
       // GC-driven ContextCleaner LAG, not checkpoint or store growth —
       // shuffle/broadcast state from prior micro-batches is only cleaned

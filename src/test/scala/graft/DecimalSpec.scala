@@ -138,8 +138,9 @@ class DecimalSpec extends AnyFunSuite {
     val root = java.nio.file.Paths.get("src/main/scala/graft")
     val occurrences = java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      // tools/ = measurement probes (HeadroomProbe feeds dsum its own
-      // synthetic contract-scale column by design), not query lanes
+      // tools/ = measurement probes, not query lanes (the headroom probe
+      // that fed dsum a synthetic contract-scale column is recorded in
+      // SCALING.md "Round 18: the headroom projection PROVEN")
       .filterNot(_.toString.contains("/tools/"))
       .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
       .map { src =>

@@ -404,9 +404,13 @@ class PlanSpec extends AnyFunSuite {
     // SCALING.md; the AQE rewrite path (measured sizes) is the
     // size-safe half, evidenced by the r19 executed-plan dumps.
     import org.apache.spark.sql.functions.col
+    // the battery runs the shipped session, so the child sessions below
+    // inherit preferSortMergeJoin=false rather than set it themselves
+    SessionDefaults.confs.foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, s"battery session $k must match SessionDefaults")
+    }
     def planWith(threshold: Int): String = {
       val s = spark.newSession()
-      s.conf.set("spark.sql.join.preferSortMergeJoin", "false")
       s.conf.set("spark.sql.adaptive.enabled", "false") // static decision only
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
       Tables.t(s, sf, "orders").join(Tables.t(s, sf, "customer"),

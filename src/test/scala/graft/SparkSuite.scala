@@ -21,18 +21,14 @@ object SparkTestSession {
   }
 
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-      .master("local[8]")
+    // the shipped engine session; 8 cores keeps the plan goldens'
+    // hashpartitioning(8, ...) independent of the host
+    val s = SessionDefaults.local(8)
       .appName("graft-test")
       .config("spark.scheduler.mode", "FAIR")
       .config("spark.scheduler.allocation.file", allocationFile)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
