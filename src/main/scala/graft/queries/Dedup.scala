@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -12,10 +11,10 @@ import graft.Tables._
   *
   *  - exact dedup: hash-groupBy on a content digest — one shuffle on the
   *    digest, no driver state;
-  *  - MinHash+LSH: shingle -> 16 minhashes -> 8 bands -> bucket join, so
-  *    candidate generation is an equi-join on (band, signature), never an
-  *    O(n^2) cross join; exact Jaccard verification only touches candidate
-  *    pairs;
+  *  - MinHash+LSH: shingle -> 16 minhashes -> 8 bands -> capped-bucket
+  *    scan, so candidates only ever pair inside one (band, signature)
+  *    bucket, never an O(n^2) cross join; exact Jaccard verification only
+  *    touches candidate pairs;
   *  - SimHash: 48-bit signature, 4-band blocking (pigeonhole: any pair at
   *    Hamming distance <= 3 shares a band), verify with bit_count;
   *  - n-gram Jaccard: blocked pairwise compare inside small blocks;
@@ -39,10 +38,10 @@ import graft.Tables._
   */
 object Dedup extends QueryModule {
 
-  /** Bucket-size bound for banded self-joins. Generous enough that honest
-    * buckets (distinct payloads sharing one LSH band) never hit it at any
-    * tested SF; an adversarial corpus degrades gracefully instead of
-    * producing an O(c^2) task. */
+  /** Bucket-size bound of the capped-bucket scan. Generous enough that
+    * honest buckets (distinct payloads sharing one LSH band) never hit it
+    * at any tested SF; an adversarial corpus degrades gracefully instead
+    * of producing an O(c^2) task. */
   private[graft] val MaxBucket = 4096
 
   /** Materialize a NARROW fan-out point (membership maps, signatures,
@@ -133,45 +132,75 @@ object Dedup extends QueryModule {
     members.join(reps, "dg").select(col("doc_id"), col("rep_id"))
   }
 
-  /** Candidate pairs from a bucket table (columns: keys..., doc_id).
-    * Buckets holding <= maxBucket members emit all intra-bucket pairs
-    * (doc_a < doc_b); oversized buckets emit a star around the bucket's
-    * minimum doc_id — O(c) candidates, cluster connectivity preserved
-    * (pair-level output above the cap is degraded: non-center pairs are
-    * not emitted as candidates; see the spec and the simhash note).
+  /** The capped-bucket scan, over rows sorted by (bucket key, id) — the
+    * Motion + Sort + one-pass shape of the reference's Unique node. A run
+    * of at most maxBucket rows is buffered and paired all against all
+    * (earlier row first, `star` false); a longer run pairs its head —
+    * the bucket minimum, by the id sort — with every other member
+    * (`star` true), streaming the members past the buffered prefix, so a
+    * task never holds more than maxBucket rows however hot a bucket
+    * gets. `pair` decides what a pair emits. */
+  private def cappedRuns[R, O](rows: Iterator[R], maxBucket: Int)(
+      sameBucket: (R, R) => Boolean,
+      pair: (R, R, Boolean) => Option[O]): Iterator[O] = {
+    val in = rows.buffered
+    new Iterator[Iterator[O]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Iterator[O] = {
+        val head = in.head
+        def inRun = in.hasNext && sameBucket(head, in.head)
+        val buf = scala.collection.mutable.ArrayBuffer.empty[R]
+        while (inRun && buf.length < maxBucket) buf += in.next()
+        if (!inRun)
+          buf.indices.iterator.flatMap { i =>
+            (i + 1 until buf.length).iterator.flatMap(j => pair(buf(i), buf(j), false))
+          }
+        else
+          (buf.iterator.drop(1) ++ new Iterator[R] {
+            def hasNext: Boolean = inRun
+            def next(): R = in.next()
+          }).flatMap(m => pair(head, m, true))
+      }
+    }.flatten
+  }
+
+  /** Candidate pairs from a bucket table (columns: keys..., doc_id), as
+    * distinct (doc_a < doc_b). Buckets holding <= maxBucket rows emit all
+    * intra-bucket pairs; oversized buckets emit a star around the
+    * bucket's minimum doc_id — O(c) candidates, cluster connectivity
+    * preserved (pair-level output above the cap is degraded: non-center
+    * pairs are not emitted as candidates; see the spec and the simhash
+    * note). A row with a null key never pairs.
     *
-    * Plan shape matters here: bucket size/min are computed as WINDOW
-    * aggregates over Window.partitionBy(keys), so stats and membership
-    * come out of the SAME (keys) exchange — the (possibly corpus-sized)
-    * subtree feeding `buckets` is shuffled once and every consuming branch
-    * reuses that exchange. The previous groupBy(keys)+join-back shape put
-    * a partial-aggregate below its exchange, which defeats exchange reuse
-    * and recomputed the whole signature subtree per branch (measured ~1.9x
-    * slower at sf0.1 for identical output).
+    * One shuffle on the keys, a sort by (keys, doc_id) within each
+    * partition and one [[cappedRuns]] pass: the subtree feeding `buckets`
+    * is planned once. Keys are compared by value, so they may mix atomic
+    * types (int+long bands, string+int entity blocks).
     *
-    * The star fallback is observable without extra passes: the star branch
-    * carries a CollectMetrics node (`Dataset.observe`) counting degraded
-    * candidates, surfaced to any QueryExecutionListener as metric
-    * `star_candidates` — a silent parity divergence on adversarial corpora
-    * shows up as a nonzero counter. */
+    * The star fallback is observable without extra passes: a
+    * CollectMetrics node (`Dataset.observe`) counts the scan's star
+    * pairs, surfaced to any QueryExecutionListener as metric
+    * `star_candidates` — a silent parity divergence on adversarial
+    * corpora shows up as a nonzero counter. */
   private[graft] def cappedBucketPairs(buckets: DataFrame, keys: Seq[String],
                                        maxBucket: Int): DataFrame = {
-    val w = Window.partitionBy(keys.map(col): _*)
-    val annotated = buckets
-      .withColumn("__n", count(lit(1)).over(w))
-      .withColumn("__bmin", min(col("doc_id")).over(w))
-    val small = annotated.filter(col("__n") <= maxBucket)
-      .select((keys :+ "doc_id").map(col): _*)
-    val allPairs = small.as("a").join(small.as("b"),
-        keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val star = annotated
-      .filter(col("__n") > maxBucket && col("doc_id") =!= col("__bmin"))
-      .select(col("__bmin").as("doc_a"), col("doc_id").as("doc_b"))
+    val sp = buckets.sparkSession; import sp.implicits._
+    val id = keys.length
+    buckets.select((keys :+ "doc_id").map(col): _*)
+      .filter(keys.map(col(_).isNotNull).reduce(_ && _))
+      .repartition(keys.map(col): _*)
+      .sortWithinPartitions((keys :+ "doc_id").map(col): _*)
+      .mapPartitions { it =>
+        cappedRuns(it, maxBucket)(
+          (a, b) => (0 until id).forall(i => a.get(i) == b.get(i)),
+          (a, b, star) => {
+            val (x, y) = (a.getLong(id), b.getLong(id))
+            if (x < y) Some((x, y, star)) else None
+          })
+      }.toDF("doc_a", "doc_b", "star")
       .observe(s"star_fallback_${keys.mkString("_")}",
-        count(lit(1)).as("star_candidates"))
-    allPairs.unionAll(star)
+        count(when(col("star"), 1)).as("star_candidates"))
+      .select("doc_a", "doc_b").distinct()
   }
 
   /** Expand rep-level qualifying pairs to member pairs. `memRep` maps every
@@ -215,7 +244,7 @@ object Dedup extends QueryModule {
                                        maxBucket: Int): DataFrame = {
     val bands = minhashBands(
       fanOut(repDocs.select(col("doc_id"), col("text"))))
-    cappedBucketPairs(bands, Seq("band", "sig"), maxBucket).distinct()
+    cappedBucketPairs(bands, Seq("band", "sig"), maxBucket)
   }
 
   /** Per-doc LSH band keys (doc_id, band, sig): the [[graft.functions
@@ -281,11 +310,18 @@ object Dedup extends QueryModule {
           .mkString(" | ")
         s"struct($b as band, ($key) as key)"
       }
-    val banded = sig.select(col("doc_id"),
-        explode(expr(s"array(${bandExprs.mkString(", ")})")).as("bk"))
+    hammingPairs(sig, s"array(${bandExprs.mkString(", ")})")
+  }
+
+  /** Hamming <= 3 pairs (doc_a < doc_b, hamming) of a (doc_id, sig)
+    * table: `bands` is an SQL expression over `sig` giving the array of
+    * struct(band, key) bucket keys; capped-bucket candidates join both
+    * signatures back and keep bit_count(sig_a ^ sig_b) <= 3. The simhash
+    * lane and m_phash_dedup differ only in `bands`. */
+  private[graft] def hammingPairs(sig: DataFrame, bands: String): DataFrame = {
+    val banded = sig.select(col("doc_id"), explode(expr(bands)).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
     cappedBucketPairs(banded, Seq("band", "key"), MaxBucket)
-      .distinct()
       .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
       .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -475,51 +511,38 @@ object Dedup extends QueryModule {
     embeddingLshPairsRaw(e, maxBucket, threshold, bands, bits)
       .select(col("id_b").as("vec_id")).distinct()
 
-  private def embeddingLshPairsRaw(e: DataFrame, maxBucket: Int,
-                                   threshold: Double,
-                                   bands: Int, bits: Int): DataFrame = {
-    val sp = e.sparkSession; import sp.implicits._
+  /** (id_a < id_b, cos) of two banded rows (band, key, id, v, nrm) when
+    * their HALF_UP-6dp cosine reaches `threshold`. */
+  private def cosinePair(a: (Int, Long, Long, Array[Double], Double),
+                         b: (Int, Long, Long, Array[Double], Double),
+                         threshold: Double): Option[(Long, Long, Double)] = {
+    val va = a._4; val vb = b._4
+    var d = 0.0; var k = 0
+    val n = math.min(va.length, vb.length)
+    while (k < n) { d += va(k) * vb(k); k += 1 }
+    val raw = d / math.sqrt(a._5 * b._5)
     // same defensive pre-guard as the exact kernel: HALF_UP to 6dp moves
     // a value by at most 5e-7 (+1e-7 headroom against the guard constant
     // itself landing one ulp high), so only near-threshold values pay the
     // BigDecimal round-trip
-    val guard = threshold - 6e-7
-    // ONE payload shuffle (r14 rewrite): co-locate each (band, key)
-    // bucket and sort its run by doc_id, then iterate runs in-partition.
-    // The previous shape paid the payload THREE times — a window sort to
-    // annotate counts/min, a second full shuffle because groupByKey's
-    // lambda key can't reuse the window's partitioning, and a star
-    // join-back re-fetching vectors; on a fully-degraded corpus (every
-    // bucket oversized — the x1000 probe's regime) that was pure plan
-    // overhead around an O(n) star output. Sorting by doc_id makes the
-    // run head the star CENTER, so the oversized path streams (min,
-    // member) pairs with only the small-path buffer ever materialized —
-    // per-task memory stays bounded by maxBucket rows regardless of how
-    // hot a bucket gets.
-    // Kernel I/O: typed Dataset mapPartitions. The r15 A/B (stage D vs C
-    // at x1000, min-of-3: 1.67 vs 1.74 s; SCALING.md "Round 15: the
-    // embedding sign-LSH lanes were 95% signature cost") DISPROVED the r14
-    // encoder-overhead suspicion — an InternalRow/internalCreateDataFrame
-    // variant of this kernel measured IDENTICAL once the signature was
-    // fused (see embeddingSig: 60 per-plane vec_dot literal calls were
-    // ~the whole 80 s lane cost at x1000, now ~1 s), and it severed the
-    // plan behind a Scan ExistingRDD, hiding the banding subtree from
-    // EXPLAIN/snapshots. Typed rows keep the plan connected and the
-    // deserialization bill is noise at 2.5M rows.
-    def verify(a: (Long, Array[Double], Double),
-               b: (Long, Array[Double], Double)): Option[(Long, Long, Double)] = {
-      val va = a._2; val vb = b._2
-      var d = 0.0; var k = 0
-      val n = math.min(va.length, vb.length)
-      while (k < n) { d += va(k) * vb(k); k += 1 }
-      val raw = d / math.sqrt(a._3 * b._3)
-      if (raw >= guard) {
-        val cos = round6(raw)
-        if (cos >= threshold) {
-          Some(if (a._1 < b._1) (a._1, b._1, cos) else (b._1, a._1, cos))
-        } else None
+    if (raw >= threshold - 6e-7) {
+      val cos = round6(raw)
+      if (cos >= threshold) {
+        Some(if (a._3 < b._3) (a._3, b._3, cos) else (b._3, a._3, cos))
       } else None
-    }
+    } else None
+  }
+
+  private def embeddingLshPairsRaw(e: DataFrame, maxBucket: Int,
+                                   threshold: Double,
+                                   bands: Int, bits: Int): DataFrame = {
+    val sp = e.sparkSession; import sp.implicits._
+    // ONE payload shuffle: co-locate each (band, key) bucket, sort its run
+    // by doc_id — which makes the run head the star center — and verify
+    // inside the [[cappedRuns]] scan. The rows stay typed (Dataset
+    // mapPartitions) rather than InternalRow: an InternalRow variant
+    // measured the same and severed the plan behind a Scan ExistingRDD,
+    // hiding the banding subtree from EXPLAIN and the plan snapshots.
     embeddingBanded(e, bands, bits)
       .select(col("band").cast("int"), col("key").cast("long"),
               col("doc_id"), col("v"), col("nrm"))
@@ -527,42 +550,8 @@ object Dedup extends QueryModule {
       .repartition(col("band"), col("key"))
       .sortWithinPartitions(col("band"), col("key"), col("doc_id"))
       .mapPartitions { it =>
-        val in = it.buffered
-        new Iterator[(Long, Long, Double)] {
-          private var queue: Iterator[(Long, Long, Double)] = Iterator.empty
-          private def advance(): Unit =
-            while (!queue.hasNext && in.hasNext) {
-              val band = in.head._1; val key = in.head._2
-              def inRun = in.hasNext && in.head._1 == band && in.head._2 == key
-              val buf = scala.collection.mutable.ArrayBuffer
-                .empty[(Long, Array[Double], Double)]
-              while (inRun && buf.length < maxBucket) {
-                val r = in.next(); buf += ((r._3, r._4, r._5))
-              }
-              queue =
-                if (!inRun) {
-                  // small bucket: exact all-pairs verification in-buffer
-                  buf.indices.iterator.flatMap { i =>
-                    (i + 1 until buf.length).iterator
-                      .flatMap(j => verify(buf(i), buf(j)))
-                  }
-                } else {
-                  // oversized: star around the run head (== bucket min by
-                  // the doc_id sort) — buffered members first, then the
-                  // run tail streamed without materializing it
-                  val center = buf.head
-                  buf.iterator.drop(1).flatMap(m => verify(center, m)) ++
-                    new Iterator[(Long, Array[Double], Double)] {
-                      def hasNext: Boolean = inRun
-                      def next(): (Long, Array[Double], Double) = {
-                        val r = in.next(); (r._3, r._4, r._5)
-                      }
-                    }.flatMap(m => verify(center, m))
-                }
-            }
-          def hasNext: Boolean = { advance(); queue.hasNext }
-          def next(): (Long, Long, Double) = { advance(); queue.next() }
-        }
+        cappedRuns(it, maxBucket)((a, b) => a._1 == b._1 && a._2 == b._2,
+          (a, b, _) => cosinePair(a, b, threshold))
       }.toDF("id_a", "id_b", "cos")
   }
 
@@ -741,7 +730,6 @@ object Dedup extends QueryModule {
         explode(expr("array(length(head) div 16, length(head) div 16 + 1)"))
           .as("band"))
       val repPairs = cappedBucketPairs(banded, Seq("blk", "band"), MaxBucket)
-        .distinct()
         .join(repD.select(col("doc_id").as("doc_a"), col("head").as("ha")), "doc_a")
         .join(repD.select(col("doc_id").as("doc_b"), col("head").as("hb")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
@@ -1056,20 +1044,26 @@ object Dedup extends QueryModule {
         |WHERE bit_count(xor(a.sig, b.sig)) <= 3
         |ORDER BY doc_a, doc_b""".stripMargin,
 
-    // Ground truth for the LSH pipeline: brute-force pairwise exact
-    // jaccard over distinct 3-shingles (LSH recall at j>=0.8 with 8 bands
-    // of 2 is > 0.999 — and the sf0.01 pairs all sit at j>=0.9).
+    // Ground truth for the LSH pipeline: exact jaccard over distinct
+    // 3-shingles for every pair of documents (LSH recall at j>=0.8 with
+    // 8 bands of 2 is > 0.999 — and the sf0.01 pairs all sit at j>=0.9).
+    // Pairs are found through an inverted index on shingles: a pair with
+    // no shared shingle has jaccard 0, so this returns the rows of the
+    // all-pairs list_intersect form (MinhashOracleSpec checks the two
+    // agree) without its O(n^2) cross join.
     "d_dedup_minhash_lsh" ->
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        |s AS (SELECT doc_id, list_distinct(
-        |    [w[i] || ' ' || w[i+1] || ' ' || w[i+2] FOR i IN range(1, len(w)-1)]) AS sh
-        |  FROM d),
-        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |    CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS i,
-        |    CAST(len(list_distinct(list_concat(a.sh, b.sh))) AS BIGINT) AS u
-        |  FROM s a JOIN s b ON a.doc_id < b.doc_id)
+        |s AS (SELECT DISTINCT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS sh
+        |  FROM (SELECT doc_id, w, unnest(range(1, len(w) - 1)) AS i FROM d)),
+        |n AS (SELECT doc_id, count(*) AS sz FROM s GROUP BY doc_id),
+        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
+        |  FROM s a JOIN s b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        |  GROUP BY a.doc_id, b.doc_id),
+        |q AS (SELECT doc_a, doc_b, CAST(i AS BIGINT) AS i,
+        |    CAST(na.sz + nb.sz - i AS BIGINT) AS u
+        |  FROM p JOIN n na ON na.doc_id = doc_a JOIN n nb ON nb.doc_id = doc_b)
         |SELECT doc_a, doc_b, (2000000 * i + u) // (2 * u) AS jaccard_u
-        |FROM p WHERE (2000000 * i + u) // (2 * u) >= 800000
+        |FROM q WHERE (2000000 * i + u) // (2 * u) >= 800000
         |ORDER BY doc_a, doc_b""".stripMargin,
 
     "d_dedup_ngram_jaccard" ->

@@ -223,12 +223,13 @@ object Multimodal extends QueryModule {
     // structure, which discriminates like a content hash). 63-bit
     // signature: bin j = polynomial-3-gram % 63, bit set when the bin
     // exceeds the uniform mean. 4x16-bit LSH bands guarantee FULL recall
-    // at Hamming <= 3 (pigeonhole), so the banded equi-join output equals
-    // the brute-force oracle exactly — candidate generation stays an
-    // equi-join at any corpus size. Byte-identical payloads collapse to
-    // one representative before banding (Dedup.digestGroups) and expand
-    // back at the end (identical payload => identical signature =>
-    // Hamming 0); residual hot buckets are capped (Dedup.cappedBucketPairs).
+    // at Hamming <= 3 (pigeonhole), so below the bucket cap the banded
+    // output equals the brute-force oracle exactly — candidates come from
+    // one shuffle on (band, key) and a sorted in-bucket scan, never a
+    // cross product. Byte-identical payloads collapse to one
+    // representative before banding (Dedup.digestGroups) and expand back
+    // at the end (identical payload => identical signature => Hamming 0);
+    // buckets above the cap degrade to a star (Dedup.cappedBucketPairs).
     "m_phash_dedup" -> ((s, dir) => {
       val sp = s; import sp.implicits._
       val allAssets = assets(s, dir)
@@ -255,18 +256,8 @@ object Multimodal extends QueryModule {
             (id, sigv)
           }
         }.toDF("doc_id", "sig"))
-      val banded = sig.select(col("doc_id"),
-          explode(expr(
-            "transform(sequence(0, 3), b -> struct(b AS band, shiftright(sig, b*16) & 65535 AS key))"))
-            .as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
-      val repPairs = Dedup.cappedBucketPairs(banded, Seq("band", "key"), Dedup.MaxBucket)
-        .distinct()
-        .join(sig.select(col("doc_id").as("doc_a"), col("sig").as("sig_a")), "doc_a")
-        .join(sig.select(col("doc_id").as("doc_b"), col("sig").as("sig_b")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          bit_count(expr("sig_a ^ sig_b")).as("hamming"))
-        .filter(col("hamming") <= 3)
+      val repPairs = Dedup.hammingPairs(sig,
+        "transform(sequence(0, 3), b -> struct(b AS band, shiftright(sig, b*16) & 65535 AS key))")
       Dedup.expandPairs(memRep, memRep, repPairs, "hamming", lit(0).cast("int"))
         .orderBy(col("doc_a"), col("doc_b"))
     }),

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
@@ -939,11 +940,13 @@ object Streaming {
           case _ => batch.select(col("doc_id")).limit(0)
         })
         val remaining = b.join(storeHit, Seq("doc_id"), "left_anti")
-        val withinDup = pin(remaining.as("x")
-          .join(remaining.as("y"),
-            col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
-              col("x.doc_id") > col("y.doc_id"))
-          .select(col("x.doc_id")).distinct())
+        // rule 2: a doc above its (band, sig) bucket's minimum collapses
+        // into that minimum (one shuffle on the bucket, no self-join)
+        val withinDup = pin(remaining
+          .withColumn("bmin",
+            min(col("doc_id")).over(Window.partitionBy("band", "sig")))
+          .filter(col("doc_id") > col("bmin"))
+          .select(col("doc_id")).distinct())
         val dupIds = storeHit.union(withinDup).distinct()
           .withColumn("is_dup", lit(true))
         val decisions = batch.select(col("doc_id"))

@@ -18,8 +18,8 @@ class DedupScaleSpec extends AnyFunSuite {
     val hot = (0L until 5000L).map(id => (0, 0L, id))
     val cool = (0L until 4L).map(id => (0, 1L, 10000L + id))
     val buckets = (hot ++ cool).toDF("band", "key", "doc_id")
-    val pairs = Dedup.cappedBucketPairs(buckets, Seq("band", "key"), 100)
-      .collect()
+    val df = Dedup.cappedBucketPairs(buckets, Seq("band", "key"), 100)
+    val pairs = df.collect()
     // hot bucket: 4999 star edges around min doc_id 0; cool bucket: all 6
     val (star, all) = pairs.partition(_.getLong(1) < 10000L)
     assert(star.length == 4999)
@@ -29,6 +29,10 @@ class DedupScaleSpec extends AnyFunSuite {
     // connectivity): the star covers all 5000 ids
     val covered = star.flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(covered == (0L until 5000L).toSet)
+    // the star observation counts exactly the hot bucket's star pairs
+    val star_candidates = df.queryExecution.observedMetrics("star_fallback_band_key")
+      .getAs[Long]("star_candidates")
+    assert(star_candidates == 4999L)
   }
 
   test("5000 identical copies: pre-dedup keeps LSH candidates cluster-sized") {

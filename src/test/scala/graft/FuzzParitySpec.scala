@@ -22,7 +22,7 @@ import org.scalacheck.rng.Seed
   * silently depends on partitioning. The fixed CORRECTNESS queries
   * prove chosen paths; this hunts unchosen ones. Seeded (fixed initial
   * seed → reproducible failures) with ScalaCheck shrinking on the
-  * generated case structure. 11 properties × 63 cases = 693 generated
+  * generated case structure. 12 properties × 63 cases = 756 generated
   * cases per run (r13 added IGNORE NULLS navigation and the
   * hstore/jsonpath row-local kernels; r14 adds pure-Scala-model
   * differentials for the rewritten substring-dedup and embedding
@@ -328,6 +328,55 @@ object FuzzParitySpec extends Properties("FuzzParity") {
       val a = run(stockLane); val b = run(graftLane)
       (a == expected && b == expected) :| {
         s"docs=$docs\nexpected=$expected\nstock=$a\ngraft=$b"
+      }
+    }
+
+  // ---- capped bucket pairs vs a pure-Scala model --------------------
+  // Dedup.cappedBucketPairs on (string, int) keys against the contract:
+  // a bucket of at most `cap` rows emits every pair with doc_a < doc_b,
+  // a larger one emits (min, member) for every member other than the
+  // min, and a null key never pairs. Buckets of cap-1, cap and cap+1
+  // distinct ids sit on both sides of the cap; one row repeated inside a
+  // bucket adds to its size but never pairs with itself.
+  private val cappedGen: Gen[(Int, List[(String, Int, Long)])] = for {
+    cap <- Gen.choose(2, 6)
+    under <- Gen.pick(cap - 1, 0L until 40L)
+    at <- Gen.pick(cap, 0L until 40L)
+    over <- Gen.pick(cap + 1, 0L until 40L)
+    loose <- Gen.listOf(for {
+      blk <- Gen.oneOf("a", "b", null)
+      band <- Gen.choose(0, 1)
+      id <- Gen.choose(0L, 39L)
+    } yield (blk, band, id))
+    repeat <- Gen.choose(0, 2)
+    seed <- Gen.long
+  } yield {
+    val sized = List(under, at, over).zipWithIndex.flatMap { case (ids, b) =>
+      ids.map(id => ("s", b, id)) }
+    val nulls = List((null: String, 0, 1L), (null: String, 0, 2L))
+    val rows = sized ++ sized.filter(_._2 == repeat).take(1) ++ nulls ++ loose
+    (cap, new scala.util.Random(seed).shuffle(rows))
+  }
+
+  property("capped bucket pairs vs pure-Scala model") =
+    Prop.forAll(cappedGen) { case (cap, rows) =>
+      val expected = rows.filter(_._1 != null).groupBy(r => (r._1, r._2))
+        .values.flatMap { bucket =>
+          val ids = bucket.map(_._3)
+          if (ids.size <= cap)
+            for (a <- ids; b <- ids if a < b) yield (a, b)
+          else ids.filter(_ != ids.min).map(m => (ids.min, m))
+        }.toSet
+      def run(s: SparkSession): Seq[(Long, Long)] = {
+        val sp = s; import sp.implicits._
+        graft.queries.Dedup.cappedBucketPairs(rows.toDF("blk", "band", "doc_id"),
+            Seq("blk", "band"), cap)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      }
+      val a = run(stockLane); val b = run(graftLane)
+      val want = expected.toSeq.sorted
+      (a == want && b == want) :| {
+        s"cap=$cap rows=$rows\nexpected=$want\nstock=$a\ngraft=$b"
       }
     }
 

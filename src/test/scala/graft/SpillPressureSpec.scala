@@ -125,7 +125,10 @@ class SpillPressureSpec extends AnyFunSuite {
 
   /** Queries chosen to cover the buffered-operator families: hash agg
     * (q1), join+agg (q3), window (q_window_running), HAVING semi join
-    * (q18), and the LSH dedup's window-capped buckets. Second element:
+    * (q18), and the LSH dedup's verification sort-merge joins (its
+    * capped-bucket stage runs behind matNarrow's checkpoint, at DataFrame
+    * build time, so the conf-driven spill comes from the verification
+    * joins over the candidate pairs). Second element:
     * which pressure profile drives the spill. q18 is the heap-heavy
     * one: under [[aggPressured]] its merge holds ≈2,000 spill readers
     * open at once (see there for the per-reader cost). */
