@@ -36,43 +36,42 @@ object Tables {
   private val rowCountCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Cached row count of `dir/name.parquet` — one counting job per
-    * fixture VERSION per session (the key folds in the path mtime, same
-    * idiom as [[probeEventsTsType]], so a regenerated fixture re-counts).
-    * Lanes that need a scalar corpus size driver-side (deterministic
-    * graph generators, anchor-count sizing) read it here instead of
-    * issuing a fresh `count()` job on every execution: over parquet that
-    * job is footer-stats-cheap, but it is still one blocking driver
-    * action per call — and over a non-footer source at 100 TB it would
-    * be a full data pass (r13 VERDICT finding #4). */
-  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
-    // mtime resolves through the Hadoop FileSystem (not java.io.File,
-    // which reports 0 for any non-local URI and would pin a stale count
-    // on hdfs:// / object-store fixtures regenerated mid-session)
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val ver = scala.util.Try {
+  /** Modification time of a fixture path, the version both caches
+    * below key on, so a fixture regenerated at the same path mid-session
+    * is read again. Resolved through the Hadoop FileSystem, which takes
+    * any path the readers take (java.io.File reports 0 for a non-local
+    * URI, and URI.create rejects a path with a space); 0 when the path
+    * cannot be stat'ed. */
+  private def fixtureVersion(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    scala.util.Try {
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         .getFileStatus(p).getModificationTime
     }.getOrElse(0L)
-    rowCountCache.computeIfAbsent(s"$p@$ver",
+  }
+
+  /** Cached row count of `dir/name.parquet` — one counting job per
+    * fixture version per session. Lanes that need a scalar corpus size
+    * driver-side (deterministic graph generators, anchor-count sizing,
+    * audit-scale guards) read it here instead of issuing a fresh
+    * `count()` job on every execution: over parquet that job is
+    * footer-stats-cheap, but it is still one blocking driver action per
+    * call — and over a non-footer source at 100 TB it would be a full
+    * data pass (r13 VERDICT finding #4). */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = s"$dir/$name.parquet"
+    rowCountCache.computeIfAbsent(s"$path@${fixtureVersion(spark, path)}",
       _ => java.lang.Long.valueOf(t(spark, dir, name).count()))
   }
 
   /** Inferred type of `path`'s `ts` column, or None when schema inference
     * rejects the footer (Spark 4 on TIMESTAMP(NANOS)). One footer read per
-    * fixture VERSION per session: the cache key folds in the file/dir
-    * mtime, so a fixture regenerated at the same path MID-SESSION (the
-    * r10 driver behavior) re-probes instead of serving the old unit's
-    * lane. Non-local paths fall back to mtime 0 (stable key). */
-  def probeEventsTsType(spark: SparkSession, path: String): Option[DataType] = {
-    val ver = scala.util.Try(new java.io.File(
-      java.net.URI.create(path).getPath match {
-        case null | "" => path
-        case p => p
-      }).lastModified()).getOrElse(0L)
-    tsTypeCache.computeIfAbsent(s"$path@$ver", _ =>
+    * fixture version per session, so a fixture regenerated at the same
+    * path mid-session (seen in r10) re-probes instead of
+    * serving the old unit's lane. */
+  def probeEventsTsType(spark: SparkSession, path: String): Option[DataType] =
+    tsTypeCache.computeIfAbsent(s"$path@${fixtureVersion(spark, path)}", _ =>
       scala.util.Try(spark.read.parquet(path).schema("ts").dataType).toOption)
-  }
 
   /** True when `path`'s `ts` column needs the raw-nanos fallback (plain
     * read fails, or infers a non-timestamp type). A DuckDB-written

@@ -203,6 +203,107 @@ object Dedup extends QueryModule {
       .select("doc_a", "doc_b").distinct()
   }
 
+  /** The SemDeDup drop law, one implementation for both semantic-dedup
+    * lanes. `rows` holds (cell, id, v, nrm) in that column order, with
+    * nrm = |v|^2 and (cell, id) unique. The result is the `vec_id` of
+    * every row that has a witness: a lower id in the same cell whose
+    * HALF_UP-6dp cosine reaches `tau`. A row dropped in several cells
+    * appears once per cell. A pair whose cosine is NaN (a zero-norm
+    * vector) is never a witness.
+    *
+    * One shuffle on cell, a sort by (cell, id), and one scan that appends
+    * each cell to Spark's spillable row buffer, built with WindowExec's
+    * thresholds from the session's conf. A jumbo cell spills through the
+    * task's memory manager into spark.local.dir, not onto the heap. The
+    * scan is block-nested: candidates are decoded in blocks of at most
+    * the in-memory threshold; each block is checked against its own lower
+    * ids in memory (the whole check, for a cell that fits in one block),
+    * then against every earlier row in one sequential pass that stops once
+    * each candidate has a witness. */
+  private[graft] def cellWitnessDrops(rows: DataFrame, tau: Double): DataFrame = {
+    val sp = rows.sparkSession; import sp.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, UnsafeProjection}
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+    val spec = org.apache.spark.sql.GraftBridge.windowBufferSpec(sp)
+    val Array(cell, id, _, _) = rows.columns
+    rows.as[(Long, Long, Array[Double], Double)]
+      .repartition(col(cell))
+      .sortWithinPartitions(col(cell), col(id))
+      .mapPartitions { it =>
+        val in = it.buffered
+        val buf = spec.create()
+        val toRow = UnsafeProjection.create(
+          Array[DataType](LongType, ArrayType(DoubleType, false), DoubleType))
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val c = in.head._1
+          buf.clear()
+          while (in.hasNext && in.head._1 == c) {
+            val (_, i, v, n) = in.next()
+            buf.add(toRow(InternalRow(i, UnsafeArrayData.fromPrimitiveArray(v), n)))
+          }
+          cellWitnesses(buf, math.max(1, spec.inMemory), tau)
+        }
+      }.toDF("vec_id")
+  }
+
+  /** [[cellWitnessDrops]]'s block-nested scan of one cell, sorted by id. */
+  private def cellWitnesses(cell: org.apache.spark.sql.GraftBridge.RowBuffer,
+                            block: Int, tau: Double): Iterator[Long] = {
+    def witness(va: Array[Double], na: Double, vb: Array[Double], nb: Double) =
+      cosine6(va, na, vb, nb, tau) >= tau
+    val candidates = cell.iterator
+    Iterator.range(0, cell.length, block).flatMap { start =>
+      val k = math.min(block, cell.length - start)
+      val ids = new Array[Long](k)
+      val vs = new Array[Array[Double]](k)
+      val ns = new Array[Double](k)
+      for (j <- 0 until k) {
+        val r = candidates.next()
+        ids(j) = r.getLong(0); vs(j) = r.getArray(1).toDoubleArray; ns(j) = r.getDouble(2)
+      }
+      val hit = new Array[Boolean](k)
+      var pending = 0
+      for (j <- 0 until k) {
+        var i = 0
+        while (i < j && !hit(j)) { hit(j) = witness(vs(i), ns(i), vs(j), ns(j)); i += 1 }
+        if (!hit(j)) pending += 1
+      }
+      if (start > 0 && pending > 0) {
+        // the pass stops checking once every candidate has a witness but
+        // reads on to the end, where each spill reader closes itself
+        val earlier = cell.passToEnd
+        var e = 0
+        while (earlier.hasNext) {
+          val r = earlier.next()
+          if (e < start && pending > 0) {
+            val va = r.getArray(1).toDoubleArray; val na = r.getDouble(2)
+            for (j <- 0 until k if !hit(j) && witness(va, na, vs(j), ns(j))) {
+              hit(j) = true; pending -= 1
+            }
+          }
+          e += 1
+        }
+      }
+      (0 until k).iterator.filter(hit(_)).map(ids(_))
+    }
+  }
+
+  /** Fails fast when an audit lane, quadratic or superlinear by
+    * construction, is pointed at more embeddings than
+    * `spark.graft.audit.maxRows` (default 1,000,000), unless
+    * `spark.graft.audit=true` opts in. Reads the cached
+    * [[graft.Tables.rowCount]], so a passing check runs no job. */
+  private[graft] def requireAuditScale(s: SparkSession, dir: String,
+                                       lane: String, instead: String): Unit =
+    if (!s.conf.getOption("spark.graft.audit").contains("true")) {
+      val maxRows = s.conf.getOption("spark.graft.audit.maxRows")
+        .map(_.toLong).getOrElse(1000000L)
+      val n = rowCount(s, dir, "embeddings")
+      require(n <= maxRows, s"$lane ($n rows > $maxRows); use $instead at " +
+        "scale, or set spark.graft.audit=true")
+    }
+
   /** Expand rep-level qualifying pairs to member pairs. `memRep` maps every
     * doc to its digest-group representative; `withinMembers` is the subset
     * eligible for within-group pairs (identical payloads, so the metric is
@@ -511,26 +612,30 @@ object Dedup extends QueryModule {
     embeddingLshPairsRaw(e, maxBucket, threshold, bands, bits)
       .select(col("id_b").as("vec_id")).distinct()
 
+  /** HALF_UP-6dp cosine of va and vb, given their squared norms, when it
+    * may reach `threshold`; NaN otherwise, so `>= threshold` fails, as it
+    * does for the NaN of a zero-norm vector. HALF_UP to 6dp moves a value
+    * by at most 5e-7 (+1e-7 headroom against the guard constant itself
+    * landing one ulp high), so only near-threshold values pay the
+    * BigDecimal round-trip. */
+  private def cosine6(va: Array[Double], na: Double, vb: Array[Double],
+                      nb: Double, threshold: Double): Double = {
+    var d = 0.0; var k = 0
+    val n = math.min(va.length, vb.length)
+    while (k < n) { d += va(k) * vb(k); k += 1 }
+    val raw = d / math.sqrt(na * nb)
+    if (raw >= threshold - 6e-7) round6(raw) else Double.NaN
+  }
+
   /** (id_a < id_b, cos) of two banded rows (band, key, id, v, nrm) when
     * their HALF_UP-6dp cosine reaches `threshold`. */
   private def cosinePair(a: (Int, Long, Long, Array[Double], Double),
                          b: (Int, Long, Long, Array[Double], Double),
                          threshold: Double): Option[(Long, Long, Double)] = {
-    val va = a._4; val vb = b._4
-    var d = 0.0; var k = 0
-    val n = math.min(va.length, vb.length)
-    while (k < n) { d += va(k) * vb(k); k += 1 }
-    val raw = d / math.sqrt(a._5 * b._5)
-    // same defensive pre-guard as the exact kernel: HALF_UP to 6dp moves
-    // a value by at most 5e-7 (+1e-7 headroom against the guard constant
-    // itself landing one ulp high), so only near-threshold values pay the
-    // BigDecimal round-trip
-    if (raw >= threshold - 6e-7) {
-      val cos = round6(raw)
-      if (cos >= threshold) {
-        Some(if (a._3 < b._3) (a._3, b._3, cos) else (b._3, a._3, cos))
-      } else None
-    } else None
+    val cos = cosine6(a._4, a._5, b._4, b._5, threshold)
+    if (cos >= threshold)
+      Some(if (a._3 < b._3) (a._3, b._3, cos) else (b._3, a._3, cos))
+    else None
   }
 
   private def embeddingLshPairsRaw(e: DataFrame, maxBucket: Int,
@@ -762,15 +867,8 @@ object Dedup extends QueryModule {
       // Fail fast above audit scale so the quadratic path can't be
       // pointed at a big input by accident; `spark.graft.audit=true`
       // (or a raised `spark.graft.audit.maxRows`) opts in explicitly.
-      val auditOk = s.conf.getOption("spark.graft.audit").contains("true")
-      val maxRows = s.conf.getOption("spark.graft.audit.maxRows")
-        .map(_.toLong).getOrElse(1000000L)
-      if (!auditOk) {
-        val n = t(s, dir, "embeddings").count()
-        require(n <= maxRows,
-          s"d_dedup_embedding is the O(n^2) audit path ($n rows > $maxRows); " +
-            "use d_dedup_embedding_lsh at scale, or set spark.graft.audit=true")
-      }
+      requireAuditScale(s, dir, "d_dedup_embedding is the O(n^2) audit path",
+        "d_dedup_embedding_lsh")
       val e = t(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
                 pmod(hash(col("vec_id")), lit(nBlocks)).cast("int").as("blk"))

@@ -183,7 +183,11 @@ object Similarity extends QueryModule {
     * "auto" = ceil(sqrt(n)) (the production scaling the paper
     * prescribes: per-cell size ~sqrt(n), so the within-cell pair search
     * stays ~n^1.5 total instead of n^2/K at fixed K; Bench runs this
-    * lane). The properties SimilaritySpec proves hold for any K. */
+    * lane). The properties SimilaritySpec proves hold for any K.
+    *
+    * The pair search is [[Dedup.cellWitnessDrops]] over the cells, the
+    * scan d_semdedup_probes also runs; a zero-norm vector is never a
+    * witness there. */
   private[graft] def semdedupDetail(s: SparkSession, dir: String): DataFrame = {
     graft.functions.VectorFns.register(s)
     val e = ivfE(s, dir)
@@ -195,18 +199,10 @@ object Similarity extends QueryModule {
     val cs = ivfFit(e, k)
     val assigned = ivfAssign(e, cs)
       .withColumn("nrm", expr("vec_norm_sq(v)"))
-    val a = assigned.select(col("cell"), col("vec_id").as("aid"),
-      col("v").as("av"), col("nrm").as("an"))
-    val b = assigned.select(col("cell"), col("vec_id").as("bid"),
-      col("v").as("bv"), col("nrm").as("bn"))
-    val drops = a.join(b, Seq("cell"))
-      .filter(col("aid") < col("bid") &&
-        round(expr("vec_dot(av, bv)") / sqrt(col("an") * col("bn")), 6)
-          >= SemTau)
-      .select(col("cell"), col("bid")).distinct()
-    assigned.join(drops.withColumnRenamed("bid", "vec_id")
-                    .withColumn("is_drop", lit(1)),
-                  Seq("cell", "vec_id"), "left")
+    val drops = Dedup.cellWitnessDrops(
+      assigned.select(col("cell"), col("vec_id"), col("v"), col("nrm")), SemTau)
+    assigned.join(drops.withColumn("is_drop", lit(1)), Seq("vec_id"), "left")
+      .select(col("cell"), col("vec_id"), col("v"), col("nrm"), col("is_drop"))
   }
 
   /** Two-level sampled-anchor IVF multi-probe SemDeDup — the r13 scale
@@ -223,8 +219,9 @@ object Similarity extends QueryModule {
     * split by a coarse Voronoi boundary still meet through their second
     * probe) and takes the TOP-2 fine anchors within each (the fine-level
     * multi-probe), so each vector lands in <= 4 fine cells of expected
-    * size ~4 n^(1/3). The pair search joins on the fine cell: expected
-    * pair term 16 n^2 / K2 = O(n^(4/3)) vs the legacy lane's n^(3/2) —
+    * size ~4 n^(1/3). The pair search runs within each fine cell:
+    * expected pair term 16 n^2 / K2 = O(n^(4/3)) vs the legacy lane's
+    * n^(3/2) —
     * and assignment is O(n * n^(1/3)) map-side kernel FLOPs, vs
     * n^(3/2) for flat K = sqrt(n) assignment.
     *
@@ -235,6 +232,11 @@ object Similarity extends QueryModule {
     * stride, trading cell size for anchor count like the paper's K
     * knob). Drop semantics match [[semdedupDetail]]: b is dropped iff
     * some lower-id a shares a (probed) cell with cosine >= [[SemTau]].
+    * Both lanes run that law in [[Dedup.cellWitnessDrops]]: it never
+    * materializes a pair, stops at a vector's first witness, and decodes
+    * one block of vectors (WindowExec's in-memory threshold) at a time; a
+    * jumbo fine cell spills through Spark's memory manager. A zero-norm
+    * vector (NaN cosine) is never a witness; the fixtures hold none.
     * SimilaritySpec pins the witness law and measures candidate recall
     * vs the exact within-tau pair set; the DuckDB oracle replays the
     * whole construction (anchors, probes, argmin ties) literally. */
@@ -297,151 +299,10 @@ object Similarity extends QueryModule {
       .filter(col("fcell") >= 0)
       .dropDuplicates(Seq("vec_id", "fcell"))
       .withColumn("nrm", expr("vec_norm_sq(v)"))
-    // in-cell verification kernel (r19): the previous shape self-joined
-    // `assigned` on fcell — materializing every candidate PAIR as a
-    // joined row carrying BOTH full vectors before the dot product
-    // (67.8 s executor-CPU at the x10 probe, the lane's whole cost).
-    // This is the embeddingLshPairsRaw discipline instead: co-locate
-    // each fine cell, sort its run by vec_id, and scan lower-id
-    // witnesses in a tight in-task loop — same single payload shuffle,
-    // no pair materialization, and a vector is emitted (and its scan
-    // STOPPED) at the FIRST witness, where the join always evaluated
-    // all O(cell^2) pairs. Per-task memory is one cell's vectors —
-    // exactly the key group the sort-merge join buffered. Drop set is
-    // identical: b dropped iff some lower-id a of a shared probed cell
-    // sits at HALF_UP-6dp cosine >= SemTau (guard trick + round6 as in
-    // Dedup.embeddingLshPairsRaw).
-    // Memory posture (r20, the cap-with-fallback the r19 trade deferred):
-    // the expected fine cell is ~4 n^(1/3) vectors by construction, and
-    // the in-memory buffer holds AT MOST `spark.graft.semdedup.cellCap`
-    // of them (default 65536 — ~32 MB at dim 64, executor-safe at any
-    // corpus size); a degenerate corpus that concentrates one cell past
-    // the cap overflows to a per-task disk spill (fixed-record pread
-    // file) instead of an unbounded ArrayBuffer, so the pathological
-    // cell costs disk time, not an executor OOM. The witness scan is
-    // unchanged — and on exactly the duplicate-dense corpora that create
-    // jumbo cells, the FIRST-witness early exit resolves almost every
-    // vector against the in-memory prefix, so spill reads stay rare.
-    // SpillPressureSpec pins result identity with the cap forced to 1
-    // (every multi-row cell takes the spill path).
-    //
-    // Zero-norm contract (stated, not data-dependent): a zero-norm
-    // vector makes raw = d / sqrt(0) NaN, and `NaN >= guard` is false in
-    // the JVM — such a pair is NEVER a drop witness here, where the
-    // replaced Spark filter (NaN compares greatest in Spark SQL) would
-    // have dropped it. The fixtures contain no zero vectors (the oracle
-    // is green either way); this comment is the declared semantic.
-    val sp = s; import sp.implicits._
-    val guard = SemTau - 6e-7
-    val cellCap = math.max(1, s.conf.getOption("spark.graft.semdedup.cellCap")
-      .map(_.toInt).getOrElse(1 << 16))
-    val drops = assigned
-      .select(col("fcell"), col("vec_id"), col("v"), col("nrm"))
-      .as[(Long, Long, Array[Double], Double)]
-      .repartition(col("fcell"))
-      .sortWithinPartitions(col("fcell"), col("vec_id"))
-      .mapPartitions { it =>
-        val in = it.buffered
-        var spill: CellSpill = null
-        def closeSpill(): Unit =
-          if (spill != null) { spill.close(); spill = null }
-        // spill files must not outlive the task even if the iterator is
-        // abandoned mid-cell (limit, task kill)
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => closeSpill()))
-        new Iterator[Long] {
-          private var queue: Iterator[Long] = Iterator.empty
-          private def advance(): Unit =
-            while (!queue.hasNext && in.hasNext) {
-              closeSpill() // previous cell's overflow, if any
-              val cell = in.head._1
-              val buf = scala.collection.mutable.ArrayBuffer
-                .empty[(Long, Array[Double], Double)]
-              while (in.hasNext && in.head._1 == cell) {
-                val r = in.next()
-                if (buf.length < cellCap) buf += ((r._2, r._3, r._4))
-                else {
-                  if (spill == null) spill = new CellSpill
-                  spill.append(r._2, r._3, r._4)
-                }
-              }
-              val total = buf.length + (if (spill == null) 0 else spill.n)
-              def row(i: Int): (Long, Array[Double], Double) =
-                if (i < buf.length) buf(i) else spill.read(i - buf.length)
-              queue = (1 until total).iterator.flatMap { j =>
-                val (idB, vb, nb) = row(j)
-                var i = 0
-                var hit = false
-                while (i < j && !hit) {
-                  val (_, va, na) = row(i)
-                  var d = 0.0; var p = 0
-                  val m = math.min(va.length, vb.length)
-                  while (p < m) { d += va(p) * vb(p); p += 1 }
-                  val raw = d / math.sqrt(na * nb)
-                  if (raw >= guard && Dedup.round6(raw) >= SemTau) hit = true
-                  i += 1
-                }
-                if (hit) Iterator.single(idB) else Iterator.empty
-              }
-            }
-          def hasNext: Boolean = {
-            advance()
-            val h = queue.hasNext
-            if (!h) closeSpill()
-            h
-          }
-          def next(): Long = { advance(); queue.next() }
-        }
-      }.toDF("vec_id").distinct()
+    val drops = Dedup.cellWitnessDrops(
+      assigned.select(col("fcell"), col("vec_id"), col("v"), col("nrm")), SemTau)
+      .distinct()
     e.join(drops.withColumn("is_drop", lit(1)), Seq("vec_id"), "left")
-  }
-
-  /** Per-task overflow store for ONE oversized fine cell (the
-    * semdedupProbesDetail cap fallback): records are appended once while
-    * the cell drains, then read back by index during the witness scan
-    * (positional pread — no mmap size limits, no shared state). Purely
-    * executor-side; the file lives in java.io.tmpdir for the duration of
-    * one cell and is deleted on close (and on task completion via the
-    * listener at the call site). */
-  private final class CellSpill {
-    private val file = java.io.File.createTempFile("graft-cell", ".spill")
-    file.deleteOnExit() // backstop; normal path deletes in close()
-    private val ch = java.nio.channels.FileChannel.open(file.toPath,
-      java.nio.file.StandardOpenOption.READ,
-      java.nio.file.StandardOpenOption.WRITE)
-    private val offs = scala.collection.mutable.ArrayBuffer[Long](0L)
-    private var writePos = 0L
-    var n = 0
-    def append(id: Long, v: Array[Double], nrm: Double): Unit = {
-      val bb = java.nio.ByteBuffer.allocate(8 + 8 + 4 + 8 * v.length)
-      bb.putLong(id); bb.putDouble(nrm); bb.putInt(v.length)
-      var i = 0
-      while (i < v.length) { bb.putDouble(v(i)); i += 1 }
-      bb.flip()
-      while (bb.hasRemaining) writePos += ch.write(bb, writePos)
-      offs += writePos
-      n += 1
-    }
-    def read(k: Int): (Long, Array[Double], Double) = {
-      val from = offs(k)
-      val bb = java.nio.ByteBuffer.allocate((offs(k + 1) - from).toInt)
-      var pos = from
-      while (bb.hasRemaining) {
-        val r = ch.read(bb, pos)
-        require(r >= 0, s"unexpected EOF in cell spill $file at $pos")
-        pos += r
-      }
-      bb.flip()
-      val id = bb.getLong; val nrm = bb.getDouble; val m = bb.getInt
-      val v = new Array[Double](m)
-      var i = 0
-      while (i < m) { v(i) = bb.getDouble; i += 1 }
-      (id, v, nrm)
-    }
-    def close(): Unit = {
-      try ch.close() catch { case _: Throwable => }
-      file.delete()
-    }
   }
 
   /** Per-query probe rows (qid, qv, qcell, qn): top-2 nearest cells per
@@ -1029,8 +890,8 @@ object Similarity extends QueryModule {
     // Scale design: this is WHY SemDeDup clusters first — the quadratic
     // pair search runs within a cell, never across the corpus, and K
     // grows with n (the paper uses K ~ sqrt(n)) so cell sizes stay
-    // bounded; the pair join shuffles (cell, id, v) once on cell, drops
-    // carry only (cell, id), and centroid state on the driver is K x dim
+    // bounded; the witness scan shuffles (cell, id, v) once on cell,
+    // drops carry only the id, and centroid state on the driver is K x dim
     // doubles. The exact all-pairs audit lane (d_dedup_embedding) is the
     // unclustered contrast with the O(n^2) misuse guard.
     "d_semdedup" -> ((s, dir) => {
@@ -1040,16 +901,8 @@ object Similarity extends QueryModule {
       // vs 0.19). Quarantined exactly like d_dedup_embedding: it stays
       // the oracle-parity / audit lane, and fails fast above audit scale
       // unless spark.graft.audit=true (or a raised maxRows) opts in.
-      val auditOk = s.conf.getOption("spark.graft.audit").contains("true")
-      val maxRows = s.conf.getOption("spark.graft.audit.maxRows")
-        .map(_.toLong).getOrElse(1000000L)
-      if (!auditOk) {
-        val n = rowCount(s, dir, "embeddings")
-        require(n <= maxRows,
-          s"d_semdedup is the superseded superlinear audit path ($n rows " +
-            s"> $maxRows); use d_semdedup_probes at scale, or set " +
-            "spark.graft.audit=true")
-      }
+      Dedup.requireAuditScale(s, dir,
+        "d_semdedup is the superseded superlinear audit path", "d_semdedup_probes")
       semdedupDetail(s, dir)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n"),

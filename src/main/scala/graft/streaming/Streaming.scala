@@ -294,19 +294,8 @@ object Streaming {
     val q = eventsStream(spark, dir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val fs = new org.apache.hadoop.fs.Path(tableDir)
-          .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(tableDir, s"batch=$batchId")
-        if (!fs.exists(dst)) {
-          // dot-prefixed staging dir: invisible to readers until the
-          // atomic rename commits the batch
-          val staged = new org.apache.hadoop.fs.Path(
-            tableDir, s".stage_batch_$batchId")
-          fs.delete(staged, true)
-          batch.write.mode("overwrite").parquet(staged.toString)
-          require(fs.rename(staged, dst), s"rename failed: $staged -> $dst")
-        }
-        ()
+        commitBatch(batch.sparkSession.sparkContext.hadoopConfiguration,
+          batch, tableDir, s"batch=$batchId", Seq.empty)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -356,14 +345,9 @@ object Streaming {
             Seq("row_digest"), "left_anti")
         val rows = fresh.persist()
         try {
-          if (rows.count() > 0) {
-            val commitId = java.util.UUID.randomUUID().toString
-            val staged = new Path(tableDir, s".stage_ingest_$commitId")
-            val dst = new Path(tableDir, s"ingest=$commitId")
-            fs.delete(staged, true)
-            rows.write.mode("overwrite").parquet(staged.toString)
-            require(fs.rename(staged, dst), s"rename failed: $staged -> $dst")
-          }
+          if (rows.count() > 0)
+            commitBatch(sess.sparkContext.hadoopConfiguration, rows, tableDir,
+              s"ingest=${java.util.UUID.randomUUID()}", Seq.empty)
         } finally { rows.unpersist(); () }
       }
       .start()
@@ -607,18 +591,8 @@ object Streaming {
         val assigned = graft.queries.Similarity
           .ivfAssignBroadcast(batch, cdf)
           .select(col("vec_id"), col("cell"))
-        val root = s"$storeDir/ivf_cells_stream"
-        val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-          batch.sparkSession.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(root, s"batch=$batchId")
-        if (!fs.exists(dst)) {
-          val staged = new org.apache.hadoop.fs.Path(
-            root, s".stage_batch_$batchId")
-          fs.delete(staged, true)
-          assigned.write.mode("overwrite").parquet(staged.toString)
-          require(fs.rename(staged, dst), s"rename failed: $staged -> $dst")
-        }
-        ()
+        commitBatch(batch.sparkSession.sparkContext.hadoopConfiguration,
+          assigned, s"$storeDir/ivf_cells_stream", s"batch=$batchId", Seq.empty)
       }
       .start()
     try q.processAllAvailable() finally q.stop()
@@ -834,14 +808,16 @@ object Streaming {
     folded
   }
 
-  /** Idempotent stage+rename commit of one batch's rows under `root`. */
+  /** Idempotent stage+rename commit of one batch's rows as `root/name`:
+    * skipped when that directory exists; otherwise written to a
+    * dot-prefixed stage, invisible to readers, then renamed into place. */
   private def commitBatch(
       hconf: org.apache.hadoop.conf.Configuration, df: DataFrame,
-      root: String, batchId: Long, partitionCols: Seq[String]): Unit = {
+      root: String, name: String, partitionCols: Seq[String]): Unit = {
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(hconf)
-    val dst = new org.apache.hadoop.fs.Path(root, s"batch=$batchId")
+    val dst = new org.apache.hadoop.fs.Path(root, name)
     if (!fs.exists(dst)) {
-      val staged = new org.apache.hadoop.fs.Path(root, s".stage_$batchId")
+      val staged = new org.apache.hadoop.fs.Path(root, s".stage_$name")
       fs.delete(staged, true)
       val w = df.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
@@ -904,7 +880,7 @@ object Streaming {
 
     def commit(df: DataFrame, root: String, batchId: Long,
                partitionCols: Seq[String]): Unit =
-      commitBatch(hconf, df, root, batchId, partitionCols)
+      commitBatch(hconf, df, root, s"batch=$batchId", partitionCols)
 
     val q = spark.readStream
       .schema("doc_id BIGINT, text STRING")
@@ -1124,9 +1100,9 @@ object Streaming {
           .agg(min(col("vec_id")).as("owner_vec"))
         // store state FIRST, decisions second: the probe ignores the
         // current batch, so a crash between commits replays identically
-        commitBatch(hconf, admittedVecs, vecsRoot, batchId, Seq("vpfx"))
-        commitBatch(hconf, admittedBands, bandsRoot, batchId, Seq("pfx"))
-        commitBatch(hconf, decisions, decRoot, batchId, Seq.empty)
+        commitBatch(hconf, admittedVecs, vecsRoot, s"batch=$batchId", Seq("vpfx"))
+        commitBatch(hconf, admittedBands, bandsRoot, s"batch=$batchId", Seq("pfx"))
+        commitBatch(hconf, decisions, decRoot, s"batch=$batchId", Seq.empty)
         } finally pinned.foreach(_.unpersist(false))
         ()
       }

@@ -28,4 +28,49 @@ object GraftBridge {
     val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
     execution.SQLExecution.withNewExecutionId(qe)(body)
   }
+
+  /** The thresholds WindowExec builds its partition buffer with, read
+    * from `spark`'s conf when this is called (on the driver). */
+  def windowBufferSpec(spark: SparkSession): RowBufferSpec = {
+    val c = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    RowBufferSpec(c.windowExecBufferInMemoryThreshold,
+      c.windowExecBufferSpillThreshold, c.windowExecBufferSpillSizeThreshold)
+  }
+
+  final case class RowBufferSpec(inMemory: Int, spill: Int, spillBytes: Long) {
+    /** In a task: an empty `ExternalAppendOnlyUnsafeRowArray` (private[sql])
+      * built as WindowExec builds it. It holds up to `inMemory` rows on
+      * the heap, then moves them to an UnsafeExternalSorter that spills
+      * through the task's memory manager into spark.local.dir, counted in
+      * the task's spill metrics and freed when the task completes. */
+    def create(): RowBuffer = new RowBuffer(
+      new execution.ExternalAppendOnlyUnsafeRowArray(
+        inMemory, spillBytes, spill, spillBytes))
+  }
+
+  final class RowBuffer private[sql] (
+      rows: execution.ExternalAppendOnlyUnsafeRowArray) {
+    def add(row: catalyst.expressions.UnsafeRow): Unit = rows.add(row)
+    def length: Int = rows.length
+    def clear(): Unit = rows.clear()
+    /** All rows in insertion order. A spilled row is a reused object:
+      * read it before the next `next()`. */
+    def iterator: Iterator[catalyst.expressions.UnsafeRow] =
+      rows.generateIterator()
+
+    /** [[iterator]] for a pass the caller reads to the end. An iterator
+      * over a spilled buffer opens one reader per spill file at once, and
+      * each reader registers a task-completion listener that keeps its
+      * 1 MiB buffer reachable until the task ends, even after the reader
+      * closed itself at its last row: a scan that re-reads a spilled
+      * buffer once per block would pin one buffer per spill file per
+      * pass. Readers made here skip that registration, so a pass read to
+      * the end leaves nothing behind. */
+    def passToEnd: Iterator[catalyst.expressions.UnsafeRow] = {
+      val task = org.apache.spark.TaskContext.get()
+      org.apache.spark.TaskContext.unset()
+      try rows.generateIterator()
+      finally if (task != null) org.apache.spark.TaskContext.setTaskContext(task)
+    }
+  }
 }

@@ -78,30 +78,34 @@ class FixtureCanarySpec extends AnyFunSuite {
 
   test("reader re-probes a fixture regenerated at the same path mid-session") {
     import org.apache.spark.sql.types.TimestampType
-    val dir = java.nio.file.Files.createTempDirectory("graft_regen").toString
-    val dst = java.nio.file.Path.of(s"$dir/events.parquet")
-    java.nio.file.Files.copy(
-      java.nio.file.Path.of(s"${SparkTestSession.sf}/events.parquet"), dst)
-    val first = Tables.t(spark, dir, "events")
-    assert(first.schema("ts").dataType == TimestampType)
-    val year1 = first.agg(year(min(col("ts")))).head.getInt(0)
-    assert(year1 > 1990)
-    // regenerate AT THE SAME PATH in the other unit (raw INT64 nanos —
-    // the r10 driver scenario, inverted); the mtime-keyed probe must
-    // re-run and route through the div-1000 fallback, reconstructing
-    // the identical time axis
-    val nanos = first.select(col("event_id"),
-      (expr("unix_micros(ts)") * 1000L).as("ts"),
-      col("user_id"), col("event_type"), col("value"), col("props"))
-      .limit(500).cache()
-    nanos.count()
-    java.nio.file.Files.delete(dst)
-    nanos.write.parquet(dst.toString)
-    val second = Tables.t(spark, dir, "events")
-    assert(second.schema("ts").dataType == TimestampType,
-      s"fallback lane must still yield a timestamp, got ${second.schema("ts").dataType}")
-    assert(second.agg(year(min(col("ts")))).head.getInt(0) == year1)
-    nanos.unpersist()
+    // a path with a space is one java.net.URI.create rejects; the
+    // fixture version must still move when the fixture is regenerated
+    Seq("graft_regen", "graft regen").foreach { prefix =>
+      val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+      val dst = java.nio.file.Path.of(s"$dir/events.parquet")
+      java.nio.file.Files.copy(
+        java.nio.file.Path.of(s"${SparkTestSession.sf}/events.parquet"), dst)
+      val first = Tables.t(spark, dir, "events")
+      assert(first.schema("ts").dataType == TimestampType)
+      val year1 = first.agg(year(min(col("ts")))).head.getInt(0)
+      assert(year1 > 1990)
+      // regenerate AT THE SAME PATH in the other unit (raw INT64 nanos —
+      // the r10 fixture-regeneration scenario, inverted); the mtime-keyed probe must
+      // re-run and route through the div-1000 fallback, reconstructing
+      // the identical time axis
+      val nanos = first.select(col("event_id"),
+        (expr("unix_micros(ts)") * 1000L).as("ts"),
+        col("user_id"), col("event_type"), col("value"), col("props"))
+        .limit(500).cache()
+      nanos.count()
+      java.nio.file.Files.delete(dst)
+      nanos.write.parquet(dst.toString)
+      val second = Tables.t(spark, dir, "events")
+      assert(second.schema("ts").dataType == TimestampType,
+        s"fallback lane must still yield a timestamp, got ${second.schema("ts").dataType}")
+      assert(second.agg(year(min(col("ts")))).head.getInt(0) == year1)
+      nanos.unpersist()
+    }
   }
 
   test("batch and streaming readers agree on the events timestamp axis") {

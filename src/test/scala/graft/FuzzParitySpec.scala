@@ -22,12 +22,13 @@ import org.scalacheck.rng.Seed
   * silently depends on partitioning. The fixed CORRECTNESS queries
   * prove chosen paths; this hunts unchosen ones. Seeded (fixed initial
   * seed → reproducible failures) with ScalaCheck shrinking on the
-  * generated case structure. 12 properties × 63 cases = 756 generated
+  * generated case structure. 13 properties × 63 cases = 819 generated
   * cases per run (r13 added IGNORE NULLS navigation and the
   * hstore/jsonpath row-local kernels; r14 adds pure-Scala-model
   * differentials for the rewritten substring-dedup and embedding
-  * sign-LSH operators, star fallback included); [[TlpFuzzSpec]] adds
-  * 200 metamorphic cases on the same lanes.
+  * sign-LSH operators, star fallback included; the capped bucket pairs
+  * and the semantic-dedup cell witness scan have models too);
+  * [[TlpFuzzSpec]] adds 200 metamorphic cases on the same lanes.
   *
   * Float discipline: double SUM/AVG group-aggregates are excluded from
   * the grammar (addition order legitimately varies with partitioning);
@@ -378,6 +379,91 @@ object FuzzParitySpec extends Properties("FuzzParity") {
       (a == want && b == want) :| {
         s"cap=$cap rows=$rows\nexpected=$want\nstock=$a\ngraft=$b"
       }
+    }
+
+  // ---- cell witness drops vs a pure-Scala model ----------------------
+  // Dedup.cellWitnessDrops, the SemDeDup drop law of both semantic-dedup
+  // lanes, against a first-witness model: within a cell, sorted by id, a
+  // row is dropped iff a lower id sits at HALF_UP-6dp cosine >= tau; a
+  // NaN cosine (the planted zero vector) is never a witness. Window
+  // buffer thresholds of 1-8 make the scan run many blocks. The random
+  // cells also spill (count threshold 1-8). The jumbo cell of
+  // near-identical vectors keeps the default spill threshold: every pass
+  // over a spilled cell opens one reader (and, with read-ahead on, one
+  // thread) per spill file, so it runs its many blocks in memory.
+  private type CellRow = (Long, Long, Array[Double], Double)
+  private val witnessGen: Gen[(Int, Int, List[CellRow], List[CellRow])] = {
+    val dim = 6
+    def row(cell: Long, id: Long, v: Array[Double]): CellRow =
+      (cell, id, v, v.map(x => x * x).sum)
+    def cellOf(rnd: scala.util.Random, cell: Long, n: Int,
+               vec: Int => Array[Double]): List[CellRow] =
+      Iterator.continually(rnd.nextLong()).distinct.take(n).zipWithIndex
+        .map { case (id, i) => row(cell, id, vec(i)) }.toList
+    for {
+      inMem <- Gen.choose(1, 8)
+      spill <- Gen.choose(1, 8)
+      sizes <- Gen.listOfN(3, Gen.choose(1, 16))
+      jumbo <- Gen.choose(2000, 3000)
+      seed <- Gen.long
+    } yield {
+      val rnd = new scala.util.Random(seed)
+      // three prototypes plus noise wide enough to put pairs on both
+      // sides of tau; the same id may recur across cells
+      val small = sizes.flatMap { n =>
+        cellOf(rnd, rnd.nextLong(), n, _ => {
+          val p = rnd.nextInt(3)
+          Array.tabulate(dim)(i => math.sin(p * 7 + i) + rnd.nextGaussian() * 0.6)
+        })
+      }
+      val base = Array.tabulate(dim)(i => math.cos(i + 1.0))
+      val big = cellOf(rnd, rnd.nextLong(), jumbo,
+        i => base.map(_ + 1e-3 * math.sin(i * 0.37)))
+      def planted(rows: List[CellRow]): List[CellRow] = {
+        val at = rows(rnd.nextInt(rows.size))
+        rows :+ row(at._1, rnd.nextLong(), Array.fill(dim)(0.0))
+      }
+      (inMem, spill, planted(small), planted(big))
+    }
+  }
+
+  private def witnessModel(rows: Seq[CellRow], tau: Double): Seq[Long] =
+    rows.groupBy(_._1).values.toSeq.flatMap { cell =>
+      val s = cell.sortBy(_._2)
+      def witness(a: CellRow, b: CellRow): Boolean = {
+        var d = 0.0; var p = 0
+        while (p < a._3.length) { d += a._3(p) * b._3(p); p += 1 }
+        val raw = d / math.sqrt(a._4 * b._4)
+        !raw.isNaN && java.math.BigDecimal.valueOf(raw)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue() >= tau
+      }
+      s.indices.filter(j => (0 until j).exists(i => witness(s(i), s(j))))
+        .map(s(_)._2)
+    }.sorted
+
+  property("cell witness drops vs pure-Scala model") =
+    Prop.forAll(witnessGen) { case (inMem, spill, small, big) =>
+      val tau = graft.queries.Similarity.SemTau
+      val inMemKey = "spark.sql.windowExec.buffer.in.memory.threshold"
+      val spillKey = "spark.sql.windowExec.buffer.spill.threshold"
+      def run(s: SparkSession, rows: List[CellRow], spills: Boolean): Seq[Long] = {
+        val sp = s; import sp.implicits._
+        s.conf.set(inMemKey, inMem.toString)
+        if (spills) s.conf.set(spillKey, spill.toString)
+        try graft.queries.Dedup.cellWitnessDrops(
+            rows.toDF("cell", "vec_id", "v", "nrm"), tau)
+          .collect().map(_.getLong(0)).toSeq.sorted
+        finally { s.conf.unset(inMemKey); s.conf.unset(spillKey) }
+      }
+      Seq(small -> true, big -> false).map { case (rows, spills) =>
+        val want = witnessModel(rows, tau)
+        val a = run(stockLane, rows, spills); val b = run(graftLane, rows, spills)
+        (a == want && b == want) :| {
+          s"inMem=$inMem spill=${if (spills) spill else "default"} " +
+            s"rows=${rows.size}\nexpected=${want.take(8)}\nstock=${a.take(8)}\n" +
+            s"graft=${b.take(8)}"
+        }
+      }.reduce(_ && _)
     }
 
   // ---- embedding sign-LSH vs a pure-Scala model ----------------------

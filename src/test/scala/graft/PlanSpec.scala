@@ -385,9 +385,15 @@ class PlanSpec extends AnyFunSuite {
       .findAllIn(p).nonEmpty, p)
   }
 
-  test("semdedup pair search joins on the cluster cell, never all-pairs") {
+  test("semdedup pair search is one cell shuffle into an in-task scan, never a pair join") {
     val detail = graft.queries.Similarity.semdedupDetail(spark, sf)
     val p = detail.queryExecution.executedPlan.toString
+    val cellExchanges = "Exchange hashpartitioning\\(cell#\\d+L?, \\d+\\)".r
+      .findAllIn(p).size
+    assert(cellExchanges == 1, s"expected one cell exchange, got $cellExchanges:\n$p")
+    assert(p.contains("MapPartitions"), p)
+    // the only join left marks drops back onto the corpus by vec_id
+    assert("Join \\[cell#".r.findFirstIn(p).isEmpty, p)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }

@@ -174,6 +174,19 @@ class SimilaritySpec extends AnyFunSuite {
     assert(detail.exists(_._5) && detail.exists(!_._5))
   }
 
+  test("audit lanes fail fast above audit scale, naming themselves, and run when opted in") {
+    val lanes = Seq("d_dedup_embedding", "d_semdedup")
+    val small = spark.newSession()
+    small.conf.set("spark.graft.audit.maxRows", "10")
+    lanes.foreach { name =>
+      val e = intercept[IllegalArgumentException](SparkEntry.queries(name)(small, sf))
+      assert(e.getMessage.contains(s"$name is the") && e.getMessage.contains("> 10)"),
+        e.getMessage)
+    }
+    small.conf.set("spark.graft.audit", "true")
+    lanes.foreach(name => assert(SparkEntry.queries(name)(small, sf).collect().nonEmpty))
+  }
+
   test("semdedup probes lane: drops are sound and recall the exact near-dup set") {
     val tau = graft.queries.Similarity.SemTau
     val det = graft.queries.Similarity.semdedupProbesDetail(spark, sf)

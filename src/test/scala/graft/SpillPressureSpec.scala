@@ -109,7 +109,9 @@ class SpillPressureSpec extends AnyFunSuite {
     * the 4-row threshold above never trips) and collect_list object
     * aggregation: 1-row window buffers spill every duplicated-digest
     * group, and the ObjectHashAggregate sort-based fallback after 1 key
-    * drives the per-doc array aggregation onto its spill path. */
+    * drives the per-doc array aggregation onto its spill path. The
+    * semdedup witness scan builds its cell buffer with the same window
+    * thresholds, so 1-row buffers spill every cell of two or more rows. */
   private lazy val bufTight: SparkSession = {
     val s = base.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")
@@ -144,17 +146,6 @@ class SpillPressureSpec extends AnyFunSuite {
 
   private val tightShapes = Seq("d_dedup_substring")
 
-  /** Lanes whose r19 kernel rewrites removed every conf-trippable
-    * buffered operator (d_semdedup_probes: the fine-cell pair SMJ —
-    * whose buffered match group was what spilled here — is now an
-    * in-task witness scan; under the tight profile its collect_list
-    * falls back to SortAggregate, which buffers nothing). The
-    * regression that still matters is RESULT IDENTITY under the
-    * constrained profile; the spill-report assertion is dropped for
-    * these, and the per-task memory posture (one fine cell, ~4n^(1/3)
-    * by construction) is documented at the kernel. */
-  private val identityOnlyShapes = Seq("d_semdedup_probes")
-
   (shapes.map { case (n, agg) => (n, if (agg) () => aggPressured
                                      else () => bufPressured) } ++
    lightShapes.map(n => (n, () => bufLight)) ++
@@ -170,26 +161,74 @@ class SpillPressureSpec extends AnyFunSuite {
     }
   }
 
-  identityOnlyShapes.foreach { name =>
-    test(s"$name stays hash-identical under the constrained profile") {
-      val fn = SparkEntry.queries(name)
-      assert(rows(fn(bufTight, sf)) == rows(fn(base, sf)),
-        s"$name: constrained result diverged from unconstrained")
+  /** Sum of `diskBytesSpilled` over the tasks of the jobs `body` runs,
+    * read with a SparkListener: ExplainAnalyze reads operator SQL
+    * metrics, and the semdedup witness scan (a MapPartitions) has none.
+    * A job group tells these jobs apart from late events of other tests.
+    * Task ends reach the listener bus after the action returns, so this
+    * waits up to 30 s for a nonzero sum. */
+  private def diskSpilled(body: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val group = s"spill-${java.util.UUID.randomUUID()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val spilled = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          stages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          spilled.addAndGet(e.taskMetrics.diskBytesSpilled)
     }
+    val sc = base.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "semdedup spill check")
+    try {
+      body
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (spilled.get == 0 && System.nanoTime() < deadline) Thread.sleep(100)
+      spilled.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("d_semdedup_probes stays hash-identical under the constrained profile") {
+    val fn = SparkEntry.queries("d_semdedup_probes")
+    assert(rows(fn(bufTight, sf)) == rows(fn(base, sf)),
+      "d_semdedup_probes: constrained result diverged from unconstrained")
   }
 
   test("d_semdedup_probes is result-identical with the cell cap forced " +
     "to 1 (every multi-row cell takes the disk-spill fallback)") {
-    // the r20 cap-with-fallback: above spark.graft.semdedup.cellCap the
-    // in-task fine-cell buffer overflows to a per-task spill file instead
-    // of growing unbounded. cap=1 drives EVERY witness scan through the
-    // spill reader — the planted-jumbo-cell case, with the whole fixture
-    // as the jumbo corpus.
+    // the witness scan's cell cap is the window buffer's in-memory
+    // threshold: above it the cell leaves the heap buffer for the
+    // spilling sorter. cap=1 drives every multi-row cell through the
+    // spill path, and every block holds one candidate, so the scan runs
+    // the whole block-nested path from disk -- the planted-jumbo-cell
+    // case, with the whole fixture as the jumbo corpus.
     val s = base.newSession()
-    s.conf.set("spark.graft.semdedup.cellCap", "1")
+    s.conf.set("spark.sql.windowExec.buffer.in.memory.threshold", "1")
+    s.conf.set("spark.sql.windowExec.buffer.spill.threshold", "1")
     val fn = SparkEntry.queries("d_semdedup_probes")
-    assert(rows(fn(s, sf)) == rows(fn(base, sf)),
+    var capped = Seq.empty[String]
+    val spilled = diskSpilled { capped = rows(fn(s, sf)) }
+    assert(capped == rows(fn(base, sf)),
       "capped+spilled result diverged from the unconstrained run")
+    assert(spilled > 0, "d_semdedup_probes: no task spilled to disk")
+  }
+
+  test("d_semdedup spills through Spark's row buffer and stays hash-identical") {
+    // the same witness scan as d_semdedup_probes, fed by the clustered
+    // lane; 1-row window buffers spill every cell of two or more rows
+    val fn = SparkEntry.queries("d_semdedup")
+    var pressured = Seq.empty[String]
+    val spilled = diskSpilled { pressured = rows(fn(bufTight, sf)) }
+    assert(pressured == rows(fn(base, sf)),
+      "d_semdedup: constrained result diverged from unconstrained")
+    assert(spilled > 0, "d_semdedup: no task spilled to disk")
   }
 
   test("the pressured profile leaves the base session untouched") {
